@@ -152,11 +152,21 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 def _load_graph(spark, args):
+    """The command's graph, from the serving store: repeated dispatches
+    against one session (the long-lived mode run_command exists for)
+    share one persisted copy per graph dir, with its derived caches,
+    and ``index ... --out DIR`` drops it when it rewrites ``DIR/nodes``
+    (serving.invalidate matches the ancestor dir)."""
     from codegraph_spark.graph import PropertyGraph
+    from codegraph_spark.serving import shared_df
 
     if args.graph:
-        return PropertyGraph.from_parquet(
-            spark, f"{args.graph}/nodes", f"{args.graph}/edges"
+        return shared_df(
+            spark, (args.graph, "cli_graph"),
+            lambda: PropertyGraph.from_parquet(
+                spark, f"{args.graph}/nodes", f"{args.graph}/edges"
+            ),
+            eager=False,
         )
     if args.sf_dir:
         return PropertyGraph.from_tpch_recast(spark, args.sf_dir)
@@ -338,21 +348,7 @@ def run_command(args: argparse.Namespace, spark) -> Any:
     else:
         from codegraph_spark.services import AdvancedService, LSPService, MCPService
 
-        # serving-cached load: repeated dispatches against one session
-        # (the long-lived mode run_command exists for) reuse ONE
-        # persisted copy per graph dir instead of stacking a fresh
-        # .persist() per command (the leak class serving.py documents);
-        # the LRU bound also caps a session cycling many graph dirs
-        from codegraph_spark.graph import PropertyGraph
-        from codegraph_spark.serving import shared_df
-
-        src = args.graph or args.sf_dir or ""
-        g = PropertyGraph(
-            shared_df(spark, (src, "cli_graph_nodes"),
-                      lambda: _load_graph(spark, args).nodes, eager=False),
-            shared_df(spark, (src, "cli_graph_edges"),
-                      lambda: _load_graph(spark, args).edges, eager=False),
-        )
+        g = _load_graph(spark, args)
         if args.cmd == "serve":
             from codegraph_spark.mcp import serve
 

@@ -20,17 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from codegraph_spark import serving
+
 NODE_REQUIRED = ("id", "label")
 EDGE_REQUIRED = ("src", "dst", "type")
-
-# Serving-layer cache: the recast graph is the engine's ingested state
-# (the reference serves every query from a warm Neo4j store — client.go
-# pools connections to it). Rebuilding nodes/edges from raw parquet per
-# query would repeat the ingest shuffle (lineitem window) every request;
-# at 100 TB that is the difference between "query the graph" and
-# "re-ingest per query". Keyed by (applicationId, sf_dir).
-_RECAST_CACHE: dict[tuple[str, str], "PropertyGraph"] = {}
-
 
 class PropertyGraph:
     def __init__(self, nodes: DataFrame, edges: DataFrame):
@@ -42,8 +35,9 @@ class PropertyGraph:
                 raise ValueError(f"edges missing required column {c!r}")
         self.nodes = nodes
         self.edges = edges
-        self._closures: dict[tuple[str, int], DataFrame] = {}
-        self._typed_edges: dict[str, DataFrame] = {}
+        #: persisted frames derived from nodes/edges (closures, typed
+        #: edge subsets, label subsets, views, trigram postings)
+        self._derived: dict[tuple, DataFrame] = {}
 
     # ---- construction ----------------------------------------------------
     @classmethod
@@ -58,23 +52,27 @@ class PropertyGraph:
 
         if not cached:
             return cls(graph_nodes(spark, sf_dir), graph_edges(spark, sf_dir))
-        key = (spark.sparkContext.applicationId, sf_dir)
-        g = _RECAST_CACHE.get(key)
-        if g is None:
-            # Compact before persisting: the nodes/edges plans are unions
-            # of many per-table scans, so their natural partition count is
-            # the SUM of all input partitionings (130+ even at sf0.1).
-            # Every subsequent query action would pay one task per cached
-            # partition. Repartition to the session's parallelism — on a
-            # cluster, size by target partition bytes instead; the
-            # invariant is task count = O(cores), not O(input unions).
-            p = spark.sparkContext.defaultParallelism
-            g = cls(
+        # Serving-layer entry: the recast graph is the engine's ingested
+        # state (the reference serves every query from a warm Neo4j
+        # store — client.go pools connections to it). Rebuilding it per
+        # query would repeat the ingest shuffle (lineitem window) every
+        # request. Compact before persisting: the nodes/edges plans are
+        # unions of many per-table scans, so their natural partition
+        # count is the SUM of all input partitionings (130+ even at
+        # sf0.1), and every query action would pay one task per cached
+        # partition. Repartition to the session's parallelism — on a
+        # cluster, size by target partition bytes instead; the invariant
+        # is task count = O(cores), not O(input unions).
+        p = spark.sparkContext.defaultParallelism
+        return serving.shared_df(
+            spark,
+            (sf_dir, "recast_graph"),
+            lambda: cls(
                 graph_nodes(spark, sf_dir).repartition(p),
                 graph_edges(spark, sf_dir).repartition(p),
-            ).persist()
-            _RECAST_CACHE[key] = g
-        return g
+            ),
+            eager=False,
+        )
 
     def persist(self) -> "PropertyGraph":
         """Cache both tables — the serving-layer pattern (the reference
@@ -84,6 +82,15 @@ class PropertyGraph:
         self.edges = self.edges.persist()
         return self
 
+    def unpersist(self) -> "PropertyGraph":
+        """Release both tables and every derived frame, dependents
+        first (uncaching a base ahead of a not-yet-materialized
+        dependent would make Spark recompile the dependent)."""
+        for df in [*reversed(self._derived.values()), self.edges, self.nodes]:
+            df.unpersist()
+        self._derived.clear()
+        return self
+
     def write_parquet(self, nodes_path: str, edges_path: str, mode: str = "overwrite") -> None:
         # Partition by label/type: the Spark analog of Neo4j's
         # per-label indexes — label-filtered scans prune partitions.
@@ -91,8 +98,6 @@ class PropertyGraph:
         self.edges.write.mode(mode).partitionBy("type").parquet(edges_path)
         # serving contract (serving.py): any in-session rewrite of a
         # dir must drop caches built over it
-        from codegraph_spark import serving
-
         serving.invalidate(nodes_path)
         serving.invalidate(edges_path)
 
@@ -127,7 +132,7 @@ class PropertyGraph:
         per (edge_type, depth) and persisted; J2/J6-style traversals are
         then single equi-joins instead of iterative BFS rounds."""
         key = (edge_type, max_depth)
-        clo = self._closures.get(key)
+        clo = self._derived.get(key)
         if clo is None:
             from codegraph_spark.operators.traversal import forest_closure
 
@@ -137,7 +142,7 @@ class PropertyGraph:
                 .repartition(p)  # union-of-levels plan → compact task count
                 .persist()
             )
-            self._closures[key] = clo
+            self._derived[key] = clo
         return clo
 
     def closure_from(
@@ -160,7 +165,7 @@ class PropertyGraph:
         lookup scan only the service-rooted rows (the on-disk analog is
         partitioning the closure table by anc label at ingest)."""
         key = (edge_type, max_depth, anc_prefix, hops_leq)
-        clo = self._closures.get(key)
+        clo = self._derived.get(key)
         if clo is None:
             clo = self.closure(edge_type, max_depth).filter(
                 F.col("anc").startswith(anc_prefix)
@@ -168,7 +173,7 @@ class PropertyGraph:
             if hops_leq is not None:
                 clo = clo.filter(F.col("hops") <= hops_leq)
             clo = clo.persist()
-            self._closures[key] = clo
+            self._derived[key] = clo
         return clo
 
     def warm_serving_caches(
@@ -254,10 +259,10 @@ class PropertyGraph:
         the on-disk form is a parquet table refreshed with the graph).
         Use for hot join chains that every call re-derives otherwise."""
         key = ("__view__", name)
-        view = self._closures.get(key)
+        view = self._derived.get(key)
         if view is None:
             view = build().persist()
-            self._closures[key] = view
+            self._derived[key] = view
         return view
 
     def trigram_index(self, fields: tuple[str, ...] = ("name", "symbol")) -> DataFrame:
@@ -267,7 +272,7 @@ class PropertyGraph:
         table with no build stage on the query path (the ingest-time
         analog is ``write_index``/parquet alongside the graph tables)."""
         key = ("__trigram__",) + tuple(fields)
-        idx = self._closures.get(key)
+        idx = self._derived.get(key)
         if idx is None:
             from codegraph_spark.operators.inverted_index import build_trigram_index
 
@@ -277,7 +282,7 @@ class PropertyGraph:
                 .repartition(p, "gram")  # gram-hash layout = pruned lookups
                 .persist()
             )
-            self._closures[key] = idx
+            self._derived[key] = idx
         return idx
 
     def typed_edges(self, edge_type: str) -> DataFrame:
@@ -288,7 +293,8 @@ class PropertyGraph:
         type's rows instead of re-filtering the full edge table. At
         scale this is the ``partitionBy("type")`` layout of
         :meth:`write_parquet` kept hot in memory."""
-        te = self._typed_edges.get(edge_type)
+        key = ("__typed__", edge_type)
+        te = self._derived.get(key)
         if te is None:
             p = self.edges.sparkSession.sparkContext.defaultParallelism
             # hash-partition on src: iterative traversals probe by src
@@ -300,7 +306,7 @@ class PropertyGraph:
                 .repartition(max(4, p // 4), F.col("src"))
                 .persist()
             )
-            self._typed_edges[edge_type] = te
+            self._derived[key] = te
         return te
 
     # ---- primitive lookups (reference: pkg/neo4j/query.go) ---------------
@@ -313,10 +319,10 @@ class PropertyGraph:
         paths that re-touch one label per call."""
         if cached:
             key = ("__label__", label)
-            sub = self._closures.get(key)
+            sub = self._derived.get(key)
             if sub is None:
                 sub = self.nodes.filter(F.col("label") == label).persist()
-                self._closures[key] = sub
+                self._derived[key] = sub
             out = sub
         else:
             out = self.nodes.filter(F.col("label") == label)

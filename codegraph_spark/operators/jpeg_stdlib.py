@@ -34,6 +34,7 @@ T.81 Annex K); the reference repo has no media pipeline at all
 
 from __future__ import annotations
 
+import functools
 import struct
 
 # ---------------------------------------------------------------------------
@@ -66,10 +67,10 @@ _Q_LUM = [
 
 #: Annex K standard Huffman tables (encoder-side; the decoder always
 #: builds its tables from the file's own DHT segments)
-_DC_LUM_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_DC_LUM_VALS = list(range(12))
-_AC_LUM_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_AC_LUM_VALS = [
+_DC_LUM_BITS = (0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
+_DC_LUM_VALS = tuple(range(12))
+_AC_LUM_BITS = (0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D)
+_AC_LUM_VALS = (
     0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
     0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
     0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
@@ -91,40 +92,31 @@ _AC_LUM_VALS = [
     0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
     0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
     0xF9, 0xFA,
-]
+)
 
 
-_DCT_M = None
-
-
+@functools.lru_cache(maxsize=1)
 def _dct_matrix():
     """Orthonormal 8x8 DCT-II matrix: forward D = M @ B @ M.T,
     inverse B = M.T @ D @ M. Cached per process (pure constant)."""
-    global _DCT_M
-    if _DCT_M is None:
-        import math
+    import math
 
-        import numpy as np
+    import numpy as np
 
-        M = np.empty((8, 8), dtype=np.float64)
-        for u in range(8):
-            cu = math.sqrt(0.5) if u == 0 else 1.0
-            for x in range(8):
-                M[u, x] = 0.5 * cu * math.cos((2 * x + 1) * u * math.pi / 16)
-        _DCT_M = M
-    return _DCT_M
+    M = np.empty((8, 8), dtype=np.float64)
+    for u in range(8):
+        cu = math.sqrt(0.5) if u == 0 else 1.0
+        for x in range(8):
+            M[u, x] = 0.5 * cu * math.cos((2 * x + 1) * u * math.pi / 16)
+    return M
 
 
-_CANON_CACHE: dict[tuple, dict] = {}
-
-
-def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+@functools.lru_cache(maxsize=8)
+def _canonical_codes(
+    bits: tuple[int, ...], vals: tuple[int, ...]
+) -> dict[int, tuple[int, int]]:
     """T.81 Annex C canonical code assignment:
     symbol -> (code, length). Cached per table content."""
-    ck = (tuple(bits), tuple(vals))
-    cached = _CANON_CACHE.get(ck)
-    if cached is not None:
-        return cached
     out: dict[int, tuple[int, int]] = {}
     code = 0
     k = 0
@@ -134,22 +126,15 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
             code += 1
             k += 1
         code <<= 1
-    _CANON_CACHE[ck] = out
     return out
 
 
-_QT_CACHE: dict[int, list[int]] = {}
-
-
-def _quality_table(quality: int) -> list[int]:
+@functools.lru_cache(maxsize=128)
+def _quality_table(quality: int) -> tuple[int, ...]:
     """IJG quality scaling of the Annex K luminance table (cached)."""
     q = max(1, min(100, int(quality)))
-    t = _QT_CACHE.get(q)
-    if t is None:
-        scale = 5000 // q if q < 50 else 200 - 2 * q
-        t = [max(1, min(255, (b * scale + 50) // 100)) for b in _Q_LUM]
-        _QT_CACHE[q] = t
-    return t
+    scale = 5000 // q if q < 50 else 200 - 2 * q
+    return tuple(max(1, min(255, (b * scale + 50) // 100)) for b in _Q_LUM)
 
 
 # ---------------------------------------------------------------------------
@@ -243,26 +228,18 @@ def _encode_block(w: _BitWriter, row, pred: int, dc_codes, ac_codes) -> int:
     return dc
 
 
-_CODE_ARR_CACHE: dict[tuple, tuple] = {}
-
-
-def _codes_arrays(bits: list[int], vals: list[int]):
+@functools.lru_cache(maxsize=8)
+def _codes_arrays(bits: tuple[int, ...], vals: tuple[int, ...]):
     """Canonical codes as 256-entry (code, length) int64 arrays for the
     vectorized entropy encoder (cached per table content)."""
     import numpy as np
 
-    ck = (tuple(bits), tuple(vals))
-    hit = _CODE_ARR_CACHE.get(ck)
-    if hit is None:
-        codes = _canonical_codes(bits, vals)
-        code_arr = np.zeros(256, dtype=np.int64)
-        len_arr = np.zeros(256, dtype=np.int64)
-        for sym, (code, ln) in codes.items():
-            code_arr[sym] = code
-            len_arr[sym] = ln
-        hit = (code_arr, len_arr)
-        _CODE_ARR_CACHE[ck] = hit
-    return hit
+    code_arr = np.zeros(256, dtype=np.int64)
+    len_arr = np.zeros(256, dtype=np.int64)
+    for sym, (code, ln) in _canonical_codes(bits, vals).items():
+        code_arr[sym] = code
+        len_arr[sym] = ln
+    return code_arr, len_arr
 
 
 def _encode_entropy_gray(zz, restart_interval: int) -> bytes:
@@ -580,39 +557,35 @@ def _split_scan_segments(data: bytes, pos: int) -> list[bytes]:
     return [s.replace(b"\xff\x00", b"\xff") for s in segments]
 
 
-#: 16-bit-prefix Huffman LUTs, cached per RAW DHT spec bytes (r13 — the
-#: previous cache rebuilt the (length, code)→symbol dict and sorted
-#: ~176 items per FRAME to form its key; identical DHT segments across
-#: a corpus now hash ~180 bytes instead). Values are plain Python
-#: lists: the decode loop indexes them with Python ints, and list
-#: indexing avoids the per-lookup numpy-scalar boxing.
-_HUFF_LUT_CACHE: dict[bytes, list] = {}
-
-
+# the engine's encoders emit at most four distinct raw DHT specs (luma +
+# chroma, DC + AC), so this cap never thrashes on their output while
+# bounding a corpus of arbitrary JPEGs
+@functools.lru_cache(maxsize=32)
 def _huff_lut_raw(raw: bytes) -> list:
     """Raw DHT table spec (class/id byte + 16 BITS counts + HUFFVAL)
     -> 65536-entry list: lut[16-bit peek] = (symbol << 5) | code_length,
-    0 = invalid (T.81 Annex C canonical assignment)."""
+    0 = invalid (T.81 Annex C canonical assignment).
+
+    Cached per RAW spec bytes: identical DHT segments across a
+    corpus hash ~180 bytes instead of rebuilding the LUT per frame.
+    Values are plain Python lists: the decode loop indexes them with
+    Python ints, and list indexing avoids numpy-scalar boxing."""
     import numpy as np
 
-    lut = _HUFF_LUT_CACHE.get(raw)
-    if lut is None:
-        bits = raw[1:17]
-        vals = raw[17:]
-        arr = np.zeros(1 << 16, dtype=np.int32)
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                lo = code << (16 - length)
-                hi = (code + 1) << (16 - length)
-                arr[lo:hi] = (vals[k] << 5) | length
-                code += 1
-                k += 1
-            code <<= 1
-        lut = arr.tolist()
-        _HUFF_LUT_CACHE[raw] = lut
-    return lut
+    bits = raw[1:17]
+    vals = raw[17:]
+    arr = np.zeros(1 << 16, dtype=np.int32)
+    code = 0
+    k = 0
+    for length in range(1, 17):
+        for _ in range(bits[length - 1]):
+            lo = code << (16 - length)
+            hi = (code + 1) << (16 - length)
+            arr[lo:hi] = (vals[k] << 5) | length
+            code += 1
+            k += 1
+        code <<= 1
+    return arr.tolist()
 
 
 def _segment_windows(segment: bytes) -> tuple[list, int]:

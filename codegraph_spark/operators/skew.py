@@ -101,7 +101,13 @@ def salted_self_pairs(
     globally hot or cold so no cross terms exist — the output multiset
     is identical to the split form (pinned by test_skew.py's
     plain-join equality and fuzz tests).
+
+    Raises ``ValueError`` when ``n_salt < 1``: the salt range would
+    be empty (a descending sequence) and ``pmod(x, 0)`` NULL, silently
+    changing the pair set.
     """
+    if n_salt < 1:
+        raise ValueError(f"n_salt must be >= 1, got {n_salt}")
     from functools import reduce
 
     freq = df.groupBy(*keys).agg(F.count("*").alias("_n"))

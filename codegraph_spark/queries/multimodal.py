@@ -995,8 +995,7 @@ def _stored_media_scan(spark: SparkSession, root: str, modality: str):
     content-addressed (md5 of the documents fingerprint in the PATH),
     so the cached plan can never go stale — changed source data yields
     a different root/key. Plan only, no rows cached (the
-    sources/tables.py ``_PLAN_CACHE`` class of memo, on serving.py's
-    invalidation/eviction contract)."""
+    ``load_table`` class of memo, on serving.py's contract)."""
     from codegraph_spark.serving import shared_obj
     from codegraph_spark.sources.media import read_media_dir
 

@@ -366,7 +366,7 @@ def _bpe_trained(
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Serving-cached trained tokenizer per (app, dataset): the merge
     table and the per-round symbol-table states, trained ONCE per
-    session (tokenizer training is ingest-time work — the _IVF_CACHE
+    session (tokenizer training is ingest-time work — the trained IVF
     stance) and persisted through ``serving.shared_df`` (bounded,
     LRU-evicted, invalidatable). Four registry queries consume it
     (merges / encode / compression curve / token packing); without the

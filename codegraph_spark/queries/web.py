@@ -583,9 +583,10 @@ def text_html_extract_dirty(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaks one script character or loses the unclosed paragraph changes
     the hash.
 
-    Scale shape: one Arrow-batched map pass per document (the codec
-    precedent), narrow stats out, zero shuffles before the bounded
-    output ordering."""
+    Scale shape: at most one exchange — ``spread()`` hash-partitions
+    on doc_id when the scan arrives under-partitioned (a no-op on a
+    multi-file layout) — then one Arrow-batched map pass per document
+    (the codec precedent), narrow stats out, no output ordering."""
     # spread BEFORE building the page (r13): the adversarial wrap is a
     # heavy per-row string program, and a projection ahead of the
     # repartition runs on the scan's single local partition (1 core of
@@ -739,8 +740,7 @@ def _fixture_scan(spark: SparkSession, root: str, name: str, build):
     the PATH (md5 tag — see :func:`_warc_fixture_dir`), so the cached
     plan can never go stale: changed source data yields a different
     root and therefore a different key. Plan only, no rows cached —
-    the sources/tables.py ``_PLAN_CACHE`` class of memo, with
-    serving.py's invalidation/eviction contract."""
+    the ``load_table`` class of memo, on serving.py's contract."""
     from codegraph_spark.serving import shared_obj
 
     return shared_obj(spark, (root, "fixture_scan", name), build)
@@ -867,9 +867,10 @@ def web_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     record, or any extraction-rule drift all hash-mismatch.
 
     Scale shape: file-granular parallel scan (how CommonCrawl shards —
-    ~1 GiB WARC files), one sequential member walk per file (the
-    format's contract), then the zero-shuffle per-page extraction;
-    output bounded by the subset."""
+    ~1 GiB WARC files), one round-robin exchange of the file rows
+    across cores, one sequential member walk per file (the format's
+    contract), then the per-page extraction with no further shuffle
+    and no output ordering; output bounded by the subset."""
     from codegraph_spark.sources.warc import read_warc_responses
 
     root = _warc_fixture_dir(spark, sf_dir)

@@ -1,82 +1,94 @@
-"""Session-scoped serving caches for derived corpus structures.
+"""The engine's one driver-side cache: session-scoped serving state.
 
 The engine's deployment model is a warm store (the reference serves
 every query from a long-lived Neo4j; SURVEY §3.3): structures that many
 queries re-derive — the property-graph recast, co-occurrence edges,
-text-dedup cliques, rep-level shingle postings — are built once per
-(SparkSession, dataset) and persisted. This is the in-memory analog of
+text-dedup cliques, parse records, table plans — are built once per
+(SparkSession, dataset) and reused. This is the in-memory analog of
 ingest-time materialized tables; on a cluster the same builds write
-parquet alongside the source and refresh with it.
+parquet alongside the source and refresh with it. Every other cache in
+the package is a bounded ``functools.lru_cache`` over pure inputs.
 
-Staleness contract: entries are keyed by (applicationId, dataset_dir,
-name) and are NEVER revalidated against the underlying files — a path
-whose contents are rewritten inside one session (streaming refresh,
-test fixtures reusing a tmp dir) keeps serving the old build until the
-writer calls :func:`invalidate` with that dir (or :func:`clear`).
-Every write path that rewrites a dataset dir in-session must call
-``invalidate(dir)``.
+The contract:
 
-Bounded by construction AND by eviction: a handful of named entries
-per dataset dir, and at most ``_MAX_DATASETS`` dataset dirs retained
-per application (least-recently-used dir evicted wholesale, with its
-DataFrames unpersisted) — a long-lived serving session cycling many
-dataset dirs no longer accumulates persisted blocks until executor
-memory evicts them (r5 ADVICE). Repeated query invocations REUSE one
-cached copy instead of stacking a fresh ``.persist()`` per call (the
-leak class r4's ADVICE flagged).
+- **Keying.** A caller key is ``(dataset_dir, *name)``. Entries live in
+  groups keyed ``(applicationId, dataset_dir)``; the dataset dir is
+  normalized once, here (``abspath`` for local paths, URIs as given).
+- **Bounded.** At most ``_MAX_DATASETS`` groups per process, in LRU
+  order; using any entry of a group makes the whole group most recent,
+  and the least recent group is evicted wholesale.
+- **Stamps.** An entry may carry a ``stamp`` (e.g. a file's
+  ``(mtime_ns, size)``). A lookup with a different stamp releases the
+  stored entry and rebuilds it in place, so self-validating memos need
+  no writer cooperation.
+- **Invalidation.** Unstamped entries are never revalidated against the
+  files. Every write path that rewrites a dir within a live session
+  calls :func:`invalidate` with it, which drops every group whose dir
+  equals it or is a path-component ancestor or descendant of it —
+  writing ``X/nodes`` drops what was built over ``X``.
+- **Release.** Eviction, invalidation and stamp replacement unpersist
+  only what the store itself persisted (:func:`shared_df` entries);
+  :func:`shared_obj` values are dropped by reference, so a caller's own
+  ``persist()`` of the same plan is never uncached behind its back.
 """
 
 from __future__ import annotations
 
+import os
 from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: (applicationId, dataset_dir, *name) -> persisted DataFrame (or a
-#: plain derived object via :func:`shared_obj`), in LRU order of the
-#: owning (applicationId, dataset_dir) group
-_CACHE: OrderedDict[tuple, object] = OrderedDict()
-
-
-def _drop(value: object) -> None:
-    """Release a cache entry: DataFrames are unpersisted; plain
-    objects (packed bitsets, codebooks) just drop their reference."""
-    up = getattr(value, "unpersist", None)
-    if callable(up):
-        up()
-
-
-#: retained dataset dirs per application; a serving deployment pins one
+#: retained dataset dirs per process; a serving deployment pins one
 #: or two corpora hot — anything beyond that is a scan-through pattern
 #: where caching has no reuse to exploit anyway
 _MAX_DATASETS = 4
 
-
-def _dataset_of(key: tuple) -> tuple:
-    """(applicationId, dataset_dir) — the eviction granularity. Every
-    caller passes the dataset dir as key[0] of its user key."""
-    return key[:2]
+#: (applicationId, dataset_dir) -> {name: (value, stamp, persisted)},
+#: groups in LRU order (least recent first)
+_CACHE: OrderedDict[tuple[str, str], dict[tuple, tuple]] = OrderedDict()
 
 
-def _touch_dataset(ds: tuple) -> None:
-    for k in list(_CACHE):
-        if _dataset_of(k) == ds:
-            _CACHE.move_to_end(k)
+def _norm(path: str) -> str:
+    return path if "://" in path else os.path.abspath(path)
 
 
-def _evict_lru_datasets() -> None:
-    while True:
-        order: list[tuple] = []
-        for k in _CACHE:  # first occurrence order = LRU order of groups
-            ds = _dataset_of(k)
-            if ds not in order:
-                order.append(ds)
-        if len(order) <= _MAX_DATASETS:
-            return
-        victim = order[0]
-        for k in [k for k in _CACHE if _dataset_of(k) == victim]:
-            _drop(_CACHE.pop(k))
+def _release(entry: tuple) -> None:
+    value, _, persisted = entry
+    if persisted:
+        value.unpersist()
+
+
+def _drop_group(group: dict) -> int:
+    for entry in group.values():
+        _release(entry)
+    return len(group)
+
+
+def _shared(spark, key, build, stamp, persist, eager):
+    ds = (spark.sparkContext.applicationId, _norm(key[0]))
+    name = key[1:]
+    group = _CACHE.get(ds)
+    hit = group.get(name) if group else None
+    if hit is not None:
+        if hit[1] == stamp:
+            _CACHE.move_to_end(ds)
+            return hit[0]
+        # release BEFORE rebuilding: Spark's cache manager would match
+        # the rebuilt plan to the stale persisted data otherwise
+        _release(group.pop(name))
+    value = build()
+    if persist:
+        value = value.persist()
+        if eager:
+            value.count()
+    # re-fetch: the build may have evicted or recreated this group
+    _CACHE.setdefault(ds, {})[name] = (value, stamp, persist)
+    _CACHE.move_to_end(ds)
+    while len(_CACHE) > _MAX_DATASETS:
+        _drop_group(_CACHE.popitem(last=False)[1])
+    return value
 
 
 def shared_df(
@@ -85,63 +97,57 @@ def shared_df(
     build: Callable[[], DataFrame],
     eager: bool = True,
 ) -> DataFrame:
-    """Memoized persisted DataFrame keyed by (applicationId, *key).
+    """Memoized persisted DataFrame for ``key = (dataset_dir, *name)``.
+    The store persists ``build()``'s result and unpersists it on
+    release; any object with ``persist()``/``unpersist()`` (a
+    :class:`~codegraph_spark.graph.PropertyGraph`) works the same way.
 
-    ``eager`` materializes at build time so the cost is paid exactly
-    once and any builder-local scaffolding can be torn down before the
-    handle escapes."""
-    k = (spark.sparkContext.applicationId,) + key
-    df = _CACHE.get(k)
-    if df is None:
-        df = build().persist()
-        if eager:
-            df.count()
-        _CACHE[k] = df
-    # touch BEFORE evicting: group LRU rank comes from first-occurrence
-    # order, so an old entry of the dataset being served would otherwise
-    # rank it least-recent and evict the DataFrame just built/returned
-    # (the active dataset would then thrash on every call while idle
-    # datasets stayed cached)
-    _touch_dataset(_dataset_of(k))
-    _evict_lru_datasets()
-    return df
+    ``eager`` materializes at build time (DataFrames only) so the cost
+    is paid exactly once and any builder-local scaffolding can be torn
+    down before the handle escapes."""
+    return _shared(spark, key, build, None, True, eager)
 
 
 def shared_obj(
     spark: SparkSession,
     key: tuple,
     build: Callable[[], object],
+    stamp: object = None,
 ) -> object:
-    """Memoized PLAIN-OBJECT twin of :func:`shared_df` for small
-    driver-side derived structures (a packed Bloom bitset, a trained
-    codebook) that are per-dataset state, not DataFrames. Same keying,
-    same group-LRU eviction, and — the point (r7 ADVICE) — same
-    :func:`invalidate` contract: a writer rewriting the dataset dir
-    drops these alongside the persisted DataFrames, so no private
-    module-level dict can serve a stale structure."""
-    k = (spark.sparkContext.applicationId,) + key
-    if k not in _CACHE:
-        _CACHE[k] = build()
-    obj = _CACHE[k]
-    _touch_dataset(_dataset_of(k))
-    _evict_lru_datasets()
-    return obj
+    """Memoized plain object for ``key = (dataset_dir, *name)``: a
+    packed Bloom bitset, a lazy table plan, a parquet schema. Same
+    keying, eviction and :func:`invalidate` as :func:`shared_df`, but
+    the store never persists or unpersists it. A ``stamp`` different
+    from the stored one rebuilds the entry."""
+    return _shared(spark, key, build, stamp, False, False)
+
+
+def file_stamp(path: str) -> tuple[int, int] | None:
+    """``(mtime_ns, size)`` of a local file or dir; None when it cannot
+    be stat-ed (e.g. a URI), in which case callers should not cache."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
+def _related(a: str, b: str) -> bool:
+    """a == b, or one is a path-component ancestor of the other."""
+    return a == b or a.startswith(b.rstrip("/") + "/") or b.startswith(a.rstrip("/") + "/")
 
 
 def invalidate(dataset_dir: str) -> int:
-    """Drop (and unpersist) every cached entry built over
-    ``dataset_dir``, across applications. Call from any write path
-    that rewrites a dataset dir within a live session. Returns the
-    number of entries dropped."""
-    victims = [k for k in _CACHE if len(k) > 1 and k[1] == dataset_dir]
-    for k in victims:
-        _drop(_CACHE.pop(k))
-    return len(victims)
+    """Drop every cached entry built over ``dataset_dir``, an ancestor
+    or a descendant of it, across applications. Call from any write
+    path that rewrites a dir within a live session. Returns the number
+    of entries dropped."""
+    d = _norm(dataset_dir)
+    return sum(
+        _drop_group(_CACHE.pop(ds)) for ds in list(_CACHE) if _related(ds[1], d)
+    )
 
 
 def clear() -> int:
-    """Unpersist and drop every cached entry (test teardown hook)."""
-    n = len(_CACHE)
-    for k in list(_CACHE):
-        _drop(_CACHE.pop(k))
-    return n
+    """Release and drop every cached entry (test teardown hook)."""
+    return sum(_drop_group(_CACHE.pop(ds)) for ds in list(_CACHE))

@@ -56,6 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from codegraph_spark import serving
 from codegraph_spark.sources.static_index import SKIP_DIRS
 
 #: indexer.go:164-175 — which files are documents.
@@ -538,8 +539,14 @@ def index_documents(
     MENTIONS links are resolved against it (indexer.go:62-65).
     Returns (nodes, edges). Deterministic for a fixed tree, so
     re-indexing is exactly idempotent (the reference's re-index
-    invariant, indexing_test.go)."""
-    records = document_records(walk_documents(spark, root)).persist()
+    invariant, indexing_test.go). Like ``index_project``, the parse
+    records are persisted in the serving store under ``root``, and a
+    re-index invalidates ``root`` first so an edited tree is re-read."""
+    serving.invalidate(root)
+    records = serving.shared_df(
+        spark, (root, "doc_records"),
+        lambda: document_records(walk_documents(spark, root)), eager=False,
+    )
     nodes, edges, mentions = split_document_records(records)
     if symbols is not None:
         edges = edges.unionByName(link_mentions(mentions, symbols))

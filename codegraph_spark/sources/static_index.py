@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from codegraph_spark import serving
+
 # Reference skip list, static/indexer.go:699-712 (plus Python-ecosystem
 # equivalents of vendor/bin dirs).
 SKIP_DIRS = [
@@ -357,8 +359,18 @@ def index_project(
     (createServiceNode, indexer.go:84-97) + Service-CONTAINS->File edges
     (indexer.go:132) + walk → parse → split. Deterministic for a fixed
     tree (the reference stamps createdAt/updatedAt; we leave timestamps
-    to the upsert layer, F21, so re-index is exactly idempotent)."""
-    records = index_records(walk_sources(spark, root)).persist()
+    to the upsert layer, F21, so re-index is exactly idempotent).
+
+    The parse records feed both outputs, so they are persisted in the
+    serving store under ``root``. Re-indexing first invalidates
+    ``root``: an edited tree is parsed again rather than served from
+    the previous records, which Spark's cache manager would otherwise
+    match to the identical plan."""
+    serving.invalidate(root)
+    records = serving.shared_df(
+        spark, (root, "index_records"),
+        lambda: index_records(walk_sources(spark, root)), eager=False,
+    )
     nodes, edges = split_records(records)
 
     name = service_name or root.rstrip("/").rsplit("/", 1)[-1]

@@ -9,10 +9,13 @@ are single parquet files.
 
 from __future__ import annotations
 
+import functools
 import os
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from codegraph_spark.serving import file_stamp, shared_obj
 
 TABLE_NAMES = [
     "region",
@@ -28,77 +31,40 @@ TABLE_NAMES = [
 ]
 
 
-#: (applicationId, abspath(sf_dir), name) → (stamp, lazy plan), where
-#: stamp = (mtime_ns, size). A catalog stand-in (r12):
-#: `spark.read.parquet` re-reads the file footer and re-infers the
-#: schema on EVERY call — ~90 ms per call on this box, paid once per
-#: table per query invocation, which dominated sub-second queries'
-#: bench time. A registered external table (the cluster deployment)
-#: resolves schema from the metastore instead; this memo is that
-#: behavior. Only the UNRESOLVED LAZY PLAN is cached — no rows, no
-#: persist: every action still scans parquet. The stamp in the VALUE
-#: (r13, was part of the key) self-revalidates when a test rewrites
-#: the file in-session AND evicts the prior entry on replacement, so
-#: an in-session rewrite no longer accumulates stale plans (r12
-#: ADVICE). The whole dict is additionally LRU-capped — a long serving
-#: session cycling many dataset dirs stays bounded.
-_PLAN_CACHE: OrderedDict[tuple, tuple[tuple, DataFrame]] = OrderedDict()
-_PLAN_CACHE_MAX = 256  # 10 tables/dir → ~25 dataset dirs retained
+def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
+    if name != "events":
+        return spark.read.parquet(path)
+    # events.ts is parquet TIMESTAMP(NANOS) — Spark has no nanosecond
+    # timestamp type, so read the raw int64 and truncate to micros
+    # (integer division: a double cast would lose precision at 1e18).
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy plan over ``<sf_dir>/<name>.parquet``, memoized in the
+    serving store as a catalog stand-in: ``spark.read.parquet``
+    re-reads the footer and re-infers the schema on every call,
+    where a registered external table resolves it from the metastore.
+    Only the unresolved plan is kept — every action still scans
+    parquet — and the file's ``(mtime_ns, size)`` stamp rebuilds it
+    after an in-session rewrite. Non-local paths are never memoized."""
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stamp = None  # e.g. non-local path: fall through, never cache
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
+    stamp = file_stamp(path)
+    if stamp is None:
+        return _read(spark, path, name)
+    return shared_obj(
+        spark, (sf_dir, "plan", name), lambda: _read(spark, path, name), stamp=stamp
     )
-    if stamp is not None:
-        hit = _PLAN_CACHE.get(key)
-        if hit is not None and hit[0] == stamp:
-            _PLAN_CACHE.move_to_end(key)
-            return hit[1]
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS) — Spark has no nanosecond
-        # timestamp type, so read the raw int64 and truncate to micros
-        # (integer division: a double cast would lose precision at 1e18).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
-
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
-    if stamp is not None:
-        _PLAN_CACHE[key] = (stamp, df)  # replaces any stale-stamp entry
-        _PLAN_CACHE.move_to_end(key)
-        while len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
-            _PLAN_CACHE.popitem(last=False)
-    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-#: (id(input df), keys, parallelism) → (input df ref, spread output).
-#: The partition probe (`df.rdd.getNumPartitions()`) costs a physical
-#: planning pass (~40 ms); since inputs are the _PLAN_CACHE's stable
-#: objects, one probe per (table, keys) per session suffices. The
-#: input ref in the value pins the object so id() cannot be recycled;
-#: the LRU cap (r13, r12 ADVICE) bounds how many DataFrames stay
-#: pinned when callers pass non-cached inputs (e.g. a non-stat-able
-#: path makes load_table return a fresh frame per call).
-_SPREAD_CACHE: OrderedDict[tuple, tuple[DataFrame, DataFrame]] = OrderedDict()
-_SPREAD_CACHE_MAX = 128
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:
@@ -111,15 +77,13 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     no extra exchange is paid at 100 TB (an unconditional repartition
     would re-shuffle the whole corpus there). The partition probe reads
     the physical scan layout, no job runs."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    key = (id(df), keys, par)
-    hit = _SPREAD_CACHE.get(key)
-    if hit is not None and hit[0] is df:
-        _SPREAD_CACHE.move_to_end(key)
-        return hit[1]
-    out = df if df.rdd.getNumPartitions() >= par else df.repartition(par, *keys)
-    _SPREAD_CACHE[key] = (df, out)
-    _SPREAD_CACHE.move_to_end(key)
-    while len(_SPREAD_CACHE) > _SPREAD_CACHE_MAX:
-        _SPREAD_CACHE.popitem(last=False)
-    return out
+    return _spread(df, keys, df.sparkSession.sparkContext.defaultParallelism)
+
+
+@functools.lru_cache(maxsize=128)
+def _spread(df: DataFrame, keys: tuple[str, ...], par: int) -> DataFrame:
+    """The partition probe costs a physical planning pass;
+    inputs are load_table's memoized plans, so one probe per (table,
+    keys) per session suffices. DataFrames hash by identity, so the
+    key pins its frame and an id can never be recycled."""
+    return df if df.rdd.getNumPartitions() >= par else df.repartition(par, *keys)

@@ -31,12 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-#: (applicationId, path, mtime_ns, size) → parquet schema. Each drain
-#: otherwise re-reads the file footer to infer the stream schema
-#: (~50-90 ms per query invocation — the r12 load_table finding, on
-#: the streaming door). Schema only; stamp-keyed like _PLAN_CACHE.
-_STREAM_SCHEMA_CACHE: dict[tuple, object] = {}
+from codegraph_spark import serving
 
 
 def _read_table_stream(
@@ -53,23 +48,17 @@ def _read_table_stream(
     would filter every part-*.parquet out (observed as a silent
     zero-row stream)."""
     path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(path)
-        key = (
-            spark.sparkContext.applicationId,
-            path,
-            st.st_mtime_ns,
-            st.st_size,
+    # each drain would otherwise re-read the footer to infer the stream
+    # schema; memoized and stamped like load_table's plans
+    stamp = serving.file_stamp(path)
+    schema = (
+        spark.read.parquet(path).schema
+        if stamp is None
+        else serving.shared_obj(
+            spark, (sf_dir, "stream_schema", table),
+            lambda: spark.read.parquet(path).schema, stamp=stamp,
         )
-    except OSError:
-        key = None
-    schema = _STREAM_SCHEMA_CACHE.get(key) if key else None
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        if key:
-            if len(_STREAM_SCHEMA_CACHE) > 256:
-                _STREAM_SCHEMA_CACHE.clear()
-            _STREAM_SCHEMA_CACHE[key] = schema
+    )
     reader = spark.readStream.schema(schema)
     if os.path.isdir(path):
         stream_path = path
@@ -230,8 +219,6 @@ def incremental_graph_ingest(
         merged.unpersist()
         # serving contract (serving.py): each per-batch rewrite of the
         # table dir drops caches built over it
-        from codegraph_spark import serving
-
         serving.invalidate(table_dir)
 
     q = (

@@ -12,7 +12,16 @@ import numpy as np
 import pytest
 
 
-# --- sources/tables.py cache bounding (r12 ADVICE / VERDICT item 5) ---------
+# --- sources/tables.py memo bounding ----------------------------------------
+
+
+def _plan_entries(spark, d: str) -> dict:
+    """load_table's plan entries for dataset dir ``d`` in the serving
+    store: {table name: (plan, stamp, persisted)}."""
+    from codegraph_spark import serving
+
+    group = serving._CACHE.get((spark.sparkContext.applicationId, os.path.abspath(d)), {})
+    return {name[1]: e for name, e in group.items() if name[0] == "plan"}
 
 
 def test_plan_cache_evicts_stale_stamp_on_rewrite(spark, tmp_path):
@@ -24,47 +33,38 @@ def test_plan_cache_evicts_stale_stamp_on_rewrite(spark, tmp_path):
     src = spark.range(5).selectExpr("id", "cast(id as string) AS name")
     src.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "region.parquet"))
     tables.load_table(spark, d, "region")
-    key = (spark.sparkContext.applicationId, os.path.abspath(d), "region")
-    stamp1 = tables._PLAN_CACHE[key][0]
+    stamp1 = _plan_entries(spark, d)["region"][1]
     # rewrite with different content size so the stamp must change
     spark.range(50).selectExpr(
         "id", "repeat(cast(id as string), 7) AS name"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "region.parquet"))
     df2 = tables.load_table(spark, d, "region")
     assert df2.count() == 50  # fresh plan, not the stale 5-row one
-    stamp2 = tables._PLAN_CACHE[key][0]
-    assert stamp2 != stamp1
-    # exactly ONE entry for the key: the stale stamp was evicted
-    assert sum(1 for k in tables._PLAN_CACHE if k == key) == 1
+    entries = _plan_entries(spark, d)
+    assert entries["region"][1] != stamp1
+    # exactly ONE entry for the table, holding the fresh plan
+    assert list(entries) == ["region"] and entries["region"][0] is df2
 
 
 def test_plan_cache_lru_cap(spark, tmp_path):
-    """Cycling more dataset dirs than the cap retains at most the cap
-    (a long serving session cannot accumulate plans without bound)."""
+    """Cycling more dataset dirs than the store's group cap retains at
+    most the cap (a long serving session cannot accumulate plans
+    without bound)."""
+    from codegraph_spark import serving
     from codegraph_spark.sources import tables
 
     src = spark.range(3).selectExpr("id", "cast(id as string) AS name")
-    n_dirs = 6
-    old_max = tables._PLAN_CACHE_MAX
-    tables._PLAN_CACHE_MAX = 4
-    try:
-        tables._PLAN_CACHE.clear()
-        for i in range(n_dirs):
-            d = str(tmp_path / f"ds{i}")
-            src.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(d, "region.parquet")
-            )
-            tables.load_table(spark, d, "region")
-        assert len(tables._PLAN_CACHE) <= 4
-        # the most recent dir survived
-        key = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(str(tmp_path / f"ds{n_dirs - 1}")),
-            "region",
+    n_dirs = serving._MAX_DATASETS + 2
+    for i in range(n_dirs):
+        d = str(tmp_path / f"ds{i}")
+        src.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(d, "region.parquet")
         )
-        assert key in tables._PLAN_CACHE
-    finally:
-        tables._PLAN_CACHE_MAX = old_max
+        tables.load_table(spark, d, "region")
+    assert len(serving._CACHE) <= serving._MAX_DATASETS
+    # the most recent dir survived, the first was evicted
+    assert "region" in _plan_entries(spark, str(tmp_path / f"ds{n_dirs - 1}"))
+    assert not _plan_entries(spark, str(tmp_path / "ds0"))
 
 
 def test_spread_cache_lru_cap(spark):
@@ -72,16 +72,10 @@ def test_spread_cache_lru_cap(spark):
     DataFrame objects per call) cannot pin DataFrames without bound."""
     from codegraph_spark.sources import tables
 
-    old_max = tables._SPREAD_CACHE_MAX
-    tables._SPREAD_CACHE_MAX = 8
-    try:
-        tables._SPREAD_CACHE.clear()
-        frames = [spark.range(3).selectExpr("id AS doc_id") for _ in range(20)]
-        for f in frames:
-            tables.spread(f, "doc_id")
-        assert len(tables._SPREAD_CACHE) <= 8
-    finally:
-        tables._SPREAD_CACHE_MAX = old_max
+    cap = tables._spread.cache_info().maxsize
+    for _ in range(cap + 2):
+        tables.spread(spark.range(3).selectExpr("id AS doc_id"), "doc_id")
+    assert tables._spread.cache_info().currsize <= cap
 
 
 # --- sources/media.py modality glob pushdown (r13, guide §6) -----------------

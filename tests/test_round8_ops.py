@@ -73,17 +73,21 @@ def test_bloom_bitset_dropped_by_serving_invalidate(spark):
     from codegraph_spark import serving
     from codegraph_spark.queries.dedup import text_contamination_bloom
 
+    def bitset():
+        group = serving._CACHE.get(
+            (spark.sparkContext.applicationId, os.path.abspath(TEST_SF_DIR))
+        )
+        entry = (group or {}).get(("contamination_bloom_bitset",))
+        return entry and entry[0]
+
     text_contamination_bloom(spark, TEST_SF_DIR)
-    app = spark.sparkContext.applicationId
-    key = (app, TEST_SF_DIR, "contamination_bloom_bitset")
-    assert key in serving._CACHE
-    packed = serving._CACHE[key]
+    packed = bitset()
     assert isinstance(packed, list) and len(packed) == 1024  # 2^16 bits / 64
     assert serving.invalidate(TEST_SF_DIR) >= 1
-    assert key not in serving._CACHE
+    assert bitset() is None
     # rebuild on next call reproduces the identical filter
     text_contamination_bloom(spark, TEST_SF_DIR)
-    assert serving._CACHE[key] == packed
+    assert bitset() == packed
 
 
 def test_buffered_transitions_raises_when_disorder_exceeds_horizon(

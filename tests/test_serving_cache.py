@@ -1,6 +1,7 @@
 """serving.shared_df: one build per (session, key), persisted reuse;
-bounded LRU over dataset dirs + invalidate/clear with unpersist-on-evict
-(r5 VERDICT item 5 / ADVICE)."""
+bounded LRU over dataset dirs + invalidate/clear with unpersist-on-evict;
+ancestor/descendant invalidation and release of only what the store
+persisted."""
 
 from __future__ import annotations
 
@@ -32,8 +33,9 @@ def test_shared_df_key_isolation(spark):
     assert x.count() == 1 and y.count() == 2
 
 
-def _entries() -> list[tuple]:
-    return list(serving._CACHE)
+def _live() -> set[str]:
+    """Dataset dirs with a live group in the store."""
+    return {ds for _, ds in serving._CACHE}
 
 
 def test_lru_evicts_oldest_dataset_and_unpersists(spark):
@@ -46,7 +48,7 @@ def test_lru_evicts_oldest_dataset_and_unpersists(spark):
         handles[ds] = serving.shared_df(
             spark, (ds, "tbl"), lambda i=i: spark.range(100 + i), eager=True
         )
-    live = {k[1] for k in _entries()}
+    live = _live()
     assert len(live) == serving._MAX_DATASETS
     # the two oldest dataset dirs were evicted wholesale...
     assert "/fake/ds-0" not in live and "/fake/ds-1" not in live
@@ -65,7 +67,7 @@ def test_touch_refreshes_lru_order(spark):
     # re-read the oldest: it must survive the next insertion
     serving.shared_df(spark, ("/fake/t-0", "tbl"), lambda: spark.range(200))
     serving.shared_df(spark, ("/fake/t-new", "tbl"), lambda: spark.range(300))
-    live = {k[1] for k in _entries()}
+    live = _live()
     assert "/fake/t-0" in live
     assert "/fake/t-1" not in live  # the actual LRU victim
     serving.clear()
@@ -83,11 +85,11 @@ def test_invalidate_drops_only_that_dataset_and_rebuilds(spark):
     serving.shared_df(spark, ("/fake/inv-b", "tbl"), lambda: spark.range(2))
     assert serving.invalidate("/fake/inv-a") == 1
     assert not df1.storageLevel.useMemory
-    assert {k[1] for k in _entries()} == {"/fake/inv-b"}
+    assert _live() == {"/fake/inv-b"}
     serving.shared_df(spark, ("/fake/inv-a", "tbl"), build)
     assert calls["n"] == 2  # rebuilt after invalidation
     serving.clear()
-    assert _entries() == []
+    assert not serving._CACHE
 
 
 def test_active_dataset_with_old_entry_is_not_self_evicted(spark):
@@ -104,17 +106,68 @@ def test_active_dataset_with_old_entry_is_not_self_evicted(spark):
         serving.shared_df(spark, (f"/fake/act-{i}", "a"), lambda i=i: spark.range(500 + i))
     # a SECOND entry for D must keep D (and both its entries) cached
     df = serving.shared_df(spark, ("/fake/act-D", "b"), lambda: spark.range(450))
-    live = {k[1] for k in serving._CACHE}
-    assert "/fake/act-D" in live
+    assert "/fake/act-D" in _live()
     assert df.storageLevel.useMemory
-    assert sum(1 for k in serving._CACHE if k[1] == "/fake/act-D") == 2
+    app = spark.sparkContext.applicationId
+    assert len(serving._CACHE[(app, "/fake/act-D")]) == 2
     # the victim is the oldest OTHER dataset... none evicted yet (4 groups)
     serving.shared_df(spark, ("/fake/act-new", "a"), lambda: spark.range(600))
-    live = {k[1] for k in serving._CACHE}
+    live = _live()
     assert "/fake/act-D" in live          # D stayed (recently touched)
     assert "/fake/act-0" not in live      # true LRU evicted
     serving.clear()
 
+
+
+def test_invalidate_matches_ancestors_and_descendants(spark):
+    """Rewriting X/nodes drops what was built over X (and over X/nodes
+    itself or below it), but not a sibling whose name shares a prefix."""
+    serving.clear()
+    for ds in ("/fake/g", "/fake/g/nodes", "/fake/g/nodes/part", "/fake/gx"):
+        serving.shared_obj(spark, (ds, "x"), lambda: object())
+    assert serving.invalidate("/fake/g/nodes/") == 3
+    assert _live() == {"/fake/gx"}
+    serving.clear()
+
+
+def test_dataset_dir_normalized_once(spark, tmp_path, monkeypatch):
+    """A relative and an absolute spelling of one dir share one group."""
+    serving.clear()
+    monkeypatch.chdir(tmp_path)
+    serving.shared_obj(spark, ("ds", "x"), lambda: 1)
+    assert serving.shared_obj(spark, (str(tmp_path / "ds"), "x"), lambda: 2) == 1
+    assert serving.invalidate("./ds/") == 1
+    serving.clear()
+
+
+def test_release_unpersists_only_store_persisted(spark):
+    """A lazy plan held via shared_obj is dropped by reference: the
+    caller's own persist() of the same plan survives invalidation."""
+    serving.clear()
+    plan = spark.range(700)
+    serving.shared_obj(spark, ("/fake/own", "plan"), lambda: plan)
+    owned = serving.shared_df(spark, ("/fake/own", "df"), lambda: spark.range(701))
+    plan.persist()
+    assert serving.invalidate("/fake/own") == 2
+    assert plan.storageLevel.useMemory
+    assert not owned.storageLevel.useMemory
+    plan.unpersist()
+
+
+def test_stamp_change_rebuilds_in_place(spark):
+    serving.clear()
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+
+    assert serving.shared_obj(spark, ("/fake/st", "v"), build, stamp=1) == 1
+    assert serving.shared_obj(spark, ("/fake/st", "v"), build, stamp=1) == 1
+    assert serving.shared_obj(spark, ("/fake/st", "v"), build, stamp=2) == 2
+    app = spark.sparkContext.applicationId
+    assert serving._CACHE[(app, "/fake/st")] == {("v",): (2, 2, False)}
+    serving.clear()
 
 def test_warm_views_restores_session_conf(spark, sf_dir):
     """The warehouse build must leave session-global planning conf

@@ -108,6 +108,17 @@ def test_salted_self_pairs_hub_shingle(spark):
     assert max_shard <= 3 * (100 // n_salt)
 
 
+
+@pytest.mark.parametrize("n_salt", [0, -1])
+def test_salted_self_pairs_rejects_empty_salt_range(spark, n_salt):
+    """n_salt < 1 has no salt range (the replica sequence counts down,
+    pmod by 0 is NULL): it must raise instead of returning other pairs."""
+    from codegraph_spark.operators.skew import salted_self_pairs
+
+    df = spark.createDataFrame([("d0", "k"), ("d1", "k")], "doc_id string, shingle string")
+    with pytest.raises(ValueError, match="n_salt"):
+        salted_self_pairs(df, ["shingle"], "doc_id", n_salt=n_salt, hot_threshold=0)
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
